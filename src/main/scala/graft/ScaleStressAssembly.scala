@@ -2,12 +2,12 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.assemble.ConceptAssembler
-import graft.model.{AttOut, RelOut, UmlsConceptRow}
+import graft.model.UmlsConceptRow
 import graft.render.{ConceptRenderer, RenderConfig}
 import graft.sources.UmlsSource
 
@@ -181,20 +181,6 @@ object ScaleStressAssembly {
       .withColumn("atts", array_sort(col("atts")))
       .withColumn("rels", array_sort(col("rels")))
 
-  private def toConceptRow(r: Row): UmlsConceptRow =
-    UmlsConceptRow(
-      code = r.getString(0),
-      prefLabel = r.getString(1),
-      altLabels = r.getSeq[String](2),
-      defs = r.getSeq[String](3),
-      cuis = r.getSeq[String](4),
-      tuis = r.getSeq[String](5),
-      atts = r.getSeq[Row](6).map(a => AttOut(a.getString(0), a.getString(1))),
-      rels = r.getSeq[Row](7).map(x => RelOut(x.getString(0), x.getString(1),
-        x.getString(2), x.getString(3), x.getString(4))),
-      isRoot = r.getBoolean(8),
-      treeParents = r.getSeq[String](9))
-
   def run(spark: SparkSession, factor: Int, workDir: String,
       steps: ArrayBuffer[(String, Double)],
       facts: ArrayBuffer[(String, Long)],
@@ -279,9 +265,9 @@ object ScaleStressAssembly {
         val sample = Seq("X0", "X1", s"X${nCodes - 1}")
         def rendered(cc: DataFrame): String = {
           val rows = cc.filter(col("code").isin(sample: _*))
-            .collect().sortBy(_.getString(0))
-          rows.map(r => ConceptRenderer.render(toConceptRow(r), renderCfg)
-            .text).mkString("\n")
+            .as(Encoders.product[UmlsConceptRow]).collect().sortBy(_.code)
+          rows.map(t => ConceptRenderer.render(t, renderCfg).text)
+            .mkString("\n")
         }
         val rU = rendered(ccU)
         val rS = rendered(ccS)

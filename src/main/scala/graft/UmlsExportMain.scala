@@ -15,7 +15,10 @@ import graft.sources.{ConfManifest, UmlsSource}
   * Usage:
   *   runMain graft.UmlsExportMain <sourceDir> <umls.conf> <outDir> <umlsVersion>
   *       [--strict] [--only-current] [--no-dedupe] [--parallel N]
-  *       [--distributed-write] [--shared-scan] [--master local[*]]
+  *       [--distributed-write] [--shared-scan] [--master M]
+  *
+  * `--master` defaults to `local[*]`; `--parallel N` exports up to N SABs
+  * at once.
   *
   * `--shared-scan` reads each fat table once for the whole manifest
   * ([[graft.sources.UmlsSource.sharedScan]]) — the win for
@@ -32,7 +35,8 @@ object UmlsExportMain {
     if (args.length < 4) {
       System.err.println(
         "usage: UmlsExportMain <sourceDir> <umls.conf> <outDir> <umlsVersion>" +
-          " [--strict] [--only-current] [--no-dedupe] [--master M]")
+          " [--strict] [--only-current] [--no-dedupe] [--parallel N]" +
+          " [--distributed-write] [--shared-scan] [--master M]")
       sys.exit(2)
     }
     val Array(sourceDir, confPath, outDir, version) = args.take(4)

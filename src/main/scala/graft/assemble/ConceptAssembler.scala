@@ -1,22 +1,10 @@
 package graft.assemble
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.model._
 import graft.sources.UmlsSource
-
-/** Intermediate grouped shape before prefLabel selection. */
-final case class AssembledRaw(
-    code: String,
-    atoms: Seq[AtomRow],
-    rels: Seq[RelOut],
-    defs: Seq[String],
-    atts: Seq[AttOut],
-    tuis: Seq[String],
-    isRoot: Boolean,
-    treeParents: Seq[String])
 
 /** Assembles per-code concept rows from the UMLS tables for one SAB —
   * the Spark-first re-expression of `UmlsOntology.load_tables` + `terms()`
@@ -80,10 +68,11 @@ class ConceptAssembler(
 
   /** The F1-filtered atoms, persisted once per assembler. Assembly derives
     * the per-code grouping, the AUI→code map (joined 2-3× in
-    * [[relsResolved]]/[[defsByCode]]) and the TUI attachment all from this
-    * one projection, so MRCONSO is scanned ONCE per SAB instead of 4-5×
-    * (the round-2 q25s hotspot: the plan re-derived `atoms` in four
-    * subplans whose shuffle keys differ, so ReusedExchange never fired).
+    * [[relsGroupedWithRoots]]/[[defsByCode]]) and the TUI attachment all
+    * from this one projection, so MRCONSO is scanned ONCE per SAB
+    * instead of 4-5× (the round-2 q25s hotspot: the plan re-derived
+    * `atoms` in four subplans whose shuffle keys differ, so
+    * ReusedExchange never fired).
     * MEMORY_AND_DISK: a SAB-pruned narrow projection is a few M rows for
     * the largest SAB at full-UMLS scale; disk spill keeps it safe
     * regardless. Call [[unpersistShared]] when the export is done. */
@@ -107,7 +96,7 @@ class ConceptAssembler(
     * which must be non-empty (Python falsiness — '' raises too; the
     * reference raises AttributeError). Such atoms become NULL here and are
     * dropped by the filter in [[atoms]]; strict mode surfaces them via
-    * [[invalidCodeAtoms]] (see [[concepts]]). */
+    * [[invalidCodeAtoms]] (see [[assembled]]). */
   private def codeExpr =
     if (loadOnCuis) col("CUI")
     else when(length(col("CODE")) > 0, col("CODE"))
@@ -163,29 +152,15 @@ class ConceptAssembler(
       // atom id is separately policed by [[auiCardinalityViolations]].)
       atomsShared.select(col("AUI").as("atom_id"), col("code").as("atom_code"))
 
-  /** J3+J4: relations attached to their source class, with AUI→code
-    * endpoint resolution in codes mode (`umls2rdf.py:685-727`).
+  /** J3+J4, the rels side of the assembly in ONE pass: per-source-code
+    * grouped relation structs plus the F17 root flag — `(rcode, rels,
+    * is_root)` — with AUI→code endpoint resolution in codes mode
+    * (`umls2rdf.py:685-727`).
     *
     * Codes mode: attach by AUI2 (inner — a rel not anchored at a class
     * atom is invisible, as in the reference), resolve target by AUI1
     * (unresolved targets dropped, `:717`), drop self-maps (`:715-718`).
     * Cuis mode: attach by CUI2; endpoints are the CUIs, no filtering.
-    * `is_root` (F17) is computed over ALL attached rels — before the
-    * target-resolution filters — exactly like the reference.
-    */
-  def relsResolved: (DataFrame, DataFrame) = {
-    val grouped = relsGroupedWithRoots
-    val out = grouped
-      .select(col("rcode"), explode(col("rels")).as("r"))
-      .select(col("rcode"), col("r.rel").as("rel"), col("r.rela").as("rela"),
-        col("r.cui1").as("cui1"), col("r.codeTarget"), col("r.codeSource"))
-    val rootFlags = grouped
-      .select(col("rcode").as("root_code"), col("is_root"))
-    (out, rootFlags)
-  }
-
-  /** The rels side of the assembly in ONE pass: per-source-code grouped
-    * relation structs plus the F17 root flag — `(rcode, rels, is_root)`.
     *
     * The root flag is detected over the SAME attached-rels relation the
     * grouped structs come from, so fusing both into one `groupBy` halves
@@ -283,43 +258,27 @@ class ConceptAssembler(
     * to more than one distinct code. The reference raises
     * "more than one or none codes" (`umls2rdf.py:715-716`) when a rel
     * endpoint resolves ambiguously; here the same condition is a queryable
-    * validation relation, enforced by `concepts(strict = true)`. */
+    * validation relation, enforced by `assembled(strict = true)`. */
   def auiCardinalityViolations: DataFrame =
     atomIdCode.groupBy("atom_id")
       .agg(countDistinct("atom_code").as("n_codes"))
       .filter(col("n_codes") > 1)
 
-  /** The assembled concepts: one row per code (A1), all child collections
-    * joined in.
+  /** The finished concepts: one row per code (A1), all child collections
+    * joined in, with canonical atom order, prefLabel selection (A7/A8/A9
+    * branch-for-branch, `umls2rdf.py:295-332`)
+    * and distinct sorted altLabels/CUIs/TUIs — as array expressions over
+    * the grouped shape, so finishing stays inside whole-stage codegen
+    * instead of round-tripping every class through the product encoder
+    * (the encoder map measured ~2× the whole assembly's cost at 600k
+    * atoms). Equality with the typed oracle in `src/test` is spec-pinned
+    * (`ConceptAssemblerSpec`).
     *
-    * @param strict reproduce the reference's hard asserts: fail if any atom
-    *   has an empty CODE (`umls2rdf.py:142-147`) or any AUI resolves to >1
-    *   code (`umls2rdf.py:715-716`) instead of silently dropping.
-    */
-  def concepts(strict: Boolean = false): Dataset[UmlsConceptRow] = {
-    val rankMap = rankByTty
-    val onCuis = loadOnCuis
-    import org.apache.spark.sql.Encoders
-    assembled(strict).map(raw => ConceptAssembler.finish(raw, rankMap, onCuis))(
-      Encoders.product[UmlsConceptRow])
-  }
-
-  /** Column-algebra finishing — the codegen twin of
-    * [[ConceptAssembler.finish]]: canonical atom order, prefLabel
-    * selection (A7/A8/A9 branch-for-branch), distinct sorted
-    * altLabels/CUIs/TUIs — as array expressions over the grouped shape,
-    * so the scale path (q25s, any whole-corpus pre-pass) stays inside
-    * whole-stage codegen instead of round-tripping every class through
-    * the product encoder (the encoder map measured ~2× the whole
-    * assembly's cost at 600k atoms). The typed [[concepts]] remains the
-    * per-term unit the sink's `Try` wraps (S6); equality of the two
-    * paths is spec-pinned (`ConceptAssemblerSpec`).
-    *
-    * Output columns match [[UmlsConceptRow]] field-for-field. */
+    * Output columns match [[graft.model.UmlsConceptRow]] field-for-field.
+    * `strict` as in [[assembled]]. */
   def conceptsColumns(strict: Boolean = false): DataFrame = {
     // The raising twin of [[conceptsColumnsTry]]: any per-term finishing
-    // failure (err non-null) raises with the SAME message the typed
-    // path's IllegalStateException carries.
+    // failure (err non-null) raises with its message.
     conceptsColumnsTry(strict)
       .withColumn("prefLabel",
         when(col("__finish_err").isNotNull,
@@ -331,14 +290,14 @@ class ConceptAssembler(
   /** [[conceptsColumns]] with per-term error TOLERANCE (r20): instead
     * of raising, finishing failures surface as a `__finish_err` string
     * column (NULL on success; `prefLabel` NULL on failure) carrying
-    * exactly the typed path's exception message. This is what lets the
-    * SINK consume the whole-stage-codegen finishing plan while keeping
-    * the S6 per-term error contract (`umls2rdf.py:764-771`) — the
-    * typed route decoded ~30 atom structs per class through the
-    * product encoder just so a Scala `Try` could wrap `finish`
-    * (ProfileExport measured the decode+finish map at ~2× the assembly
-    * cost at 600k atoms). Equality with the typed path — values AND
-    * error messages — is spec-pinned (`ConceptAssemblerSpec`). */
+    * the failure message. This is what lets the SINK consume the
+    * whole-stage-codegen finishing plan while keeping the S6 per-term
+    * error contract (`umls2rdf.py:764-771`) — the typed route decoded
+    * ~30 atom structs per class through the product encoder just so a
+    * Scala `Try` could wrap the finish (the decode+finish map measured
+    * ~2× the assembly cost at 600k atoms, OPTIMIZATION_r20.md).
+    * Equality with the typed oracle — values AND error messages — is
+    * spec-pinned (`ConceptAssemblerSpec`). */
   def conceptsColumnsTry(strict: Boolean = false): DataFrame = {
     val rankMap = rankByTty
     val raw = assembled(strict).toDF()
@@ -346,8 +305,8 @@ class ConceptAssembler(
     def emptyLike(c: String) =
       array().cast(schema(schema.fieldIndex(c)).dataType)
     // Canonical (aui, cui) order: the atom struct leads with those keys
-    // by construction (AtomRow field-order note), so the sort runs on the
-    // raw structs — no per-atom key rebuild, no unwrap transform.
+    // by construction (groupCollectAtoms), so the sort runs on the raw
+    // structs — no per-atom key rebuild, no unwrap transform.
     val sortedAtoms = array_sort(col("atoms"))
     val withSorted = raw.withColumn("atoms_sorted", sortedAtoms)
     val atomsS = col("atoms_sorted")
@@ -371,13 +330,12 @@ class ConceptAssembler(
           .otherwise(first),
           lit(null).cast("string"))
       } else if (rankMap.nonEmpty) {
-        // A7 argmax; FIRST max in canonical order (the typed path's maxBy
-        // tie-break) = array_position's first-occurrence pick. One rank
-        // lookup per atom (the old struct-accumulator aggregate evaluated
-        // it twice), no per-step struct rebuilds. A missing TTY fails the
-        // term like the reference's KeyError — message identical to the
-        // typed path's throw, keyed on the FIRST missing atom in
-        // canonical order (= the typed map's first-thrown atom).
+        // A7 argmax; FIRST max in canonical order (the reference's stable
+        // sort tie-break) = array_position's first-occurrence pick. One
+        // rank lookup per atom (the old struct-accumulator aggregate
+        // evaluated it twice), no per-step struct rebuilds. A missing TTY
+        // fails the term like the reference's KeyError, keyed on the
+        // FIRST missing atom in canonical order.
         val rankLit = typedLit(rankMap)
         val missing = filter(atomsS,
           a => element_at(rankLit, a.getField("tty")).isNull)
@@ -427,11 +385,15 @@ class ConceptAssembler(
     * tasks; stage two concatenates those pre-built arrays — the hot
     * reducer now receives `saltBuckets` rows instead of one row per atom.
     * Value-identical to the unsalted path because every consumer
-    * canonically re-sorts the atom array ([[conceptsColumns]] /
-    * [[ConceptAssembler.finish]]); equality is spec-pinned. */
+    * canonically re-sorts the atom array ([[conceptsColumnsTry]]);
+    * equality is spec-pinned. */
   private def groupCollectAtoms(a: DataFrame): DataFrame = {
-    // (aui, cui) lead the struct so array_sort over the raw structs IS the
-    // canonical order — see the AtomRow field-order note.
+    // Field ORDER is load-bearing: (aui, cui) lead the struct so
+    // array_sort over the raw structs IS the canonical order (struct
+    // comparison is field-by-field, and AUI is MRCONSO's primary key, so
+    // the prefix is already a total order). Only the fields the finish
+    // reads enter the struct; the grouping code rides the group key —
+    // carrying it per atom would shuffle the same string once per atom.
     val atomStruct = struct(
       col("AUI").as("aui"), col("CUI").as("cui"),
       col("STT").as("stt"), col("ISPREF").as("ispref"),
@@ -447,10 +409,15 @@ class ConceptAssembler(
         .agg(flatten(collect_list(col("partial"))).as("atoms"))
   }
 
-  /** The grouped-and-joined shape BEFORE per-class finishing — exposed so
-    * the sink can wrap finish+render in a per-term Try (S6 error
-    * tolerance, `umls2rdf.py:764-771`). */
-  def assembled(strict: Boolean = false): Dataset[AssembledRaw] = {
+  /** The grouped-and-joined shape BEFORE per-class finishing: one row per
+    * code (A1) with its atoms, rels, defs, atts, TUIs, root flag and tree
+    * parents.
+    *
+    * @param strict reproduce the reference's hard asserts: fail if any atom
+    *   has an empty CODE (`umls2rdf.py:142-147`) or any AUI resolves to >1
+    *   code (`umls2rdf.py:715-716`) instead of silently dropping.
+    */
+  def assembled(strict: Boolean = false): DataFrame = {
     if (strict && !loadOnCuis) {
       val badCodes = invalidCodeAtoms.count()
       if (badCodes > 0) throw new IllegalStateException(
@@ -460,8 +427,6 @@ class ConceptAssembler(
         s"$badAuis atom ids resolve to more than one code in SAB $sab")
     }
     val relsGrouped = relsGroupedWithRoots
-    // Only the finishing-step fields enter the collected struct (see
-    // [[AtomRow]]); the grouping code rides the group key, not each atom.
     val atomsGrouped = groupCollectAtoms(atomsShared)
     val tree =
       if (sab == "MSH") meshTree
@@ -477,8 +442,8 @@ class ConceptAssembler(
       .join(tuisByCode, col("code") === col("tcode"), "left")
       .join(tree, col("code") === col("child"), "left")
 
-    // Left joins leave absent child collections NULL; finish() treats NULL
-    // arrays as empty (cheaper than type-spelled coalesce literals).
+    // Left joins leave absent child collections NULL; the finish treats
+    // NULL arrays as empty (cheaper than type-spelled coalesce literals).
     joined.select(
       col("code"),
       col("atoms"),
@@ -488,89 +453,5 @@ class ConceptAssembler(
       col("tuis"),
       coalesce(col("is_root"), lit(false)).as("isRoot"),
       col("parents").as("treeParents"))
-      .as[AssembledRaw]
-  }
-}
-
-object ConceptAssembler {
-
-  /** Per-class finishing step: canonical atom order, prefLabel selection
-    * (A7/A8), distinct sorted altLabels (A3/F16), sorted distinct CUIs/TUIs
-    * (A5/A6). Pure function so the reference's class-level behavior tests
-    * can exercise it without a cluster.
-    */
-  def finish(raw: AssembledRaw, rankByTty: Map[String, Int],
-      loadOnCuis: Boolean): UmlsConceptRow = {
-    def orEmpty[T](xs: Seq[T]): Seq[T] = if (xs == null) Nil else xs
-    // Canonical intra-class order (determinism note in class doc).
-    // sortWith: same total order as sortBy((aui, cui)) without one key
-    // tuple per atom and boxed tuple compares (r20, guide §1.2; both
-    // sorts are stable TimSort, so ties — impossible anyway, AUI is the
-    // primary key — would order identically).
-    val atomsSorted = raw.atoms.sortWith { (x, y) =>
-      val c = x.aui.compareTo(y.aui)
-      (if (c != 0) c else x.cui.compareTo(y.cui)) < 0
-    }
-    val pref = PrefLabel.select(atomsSorted, rankByTty, loadOnCuis)
-    val alt = atomsSorted.map(_.str).distinct.filter(_ != pref).sorted
-    val cuis = atomsSorted.map(_.cui).distinct.sorted
-    UmlsConceptRow(
-      code = raw.code,
-      prefLabel = pref,
-      altLabels = alt,
-      defs = orEmpty(raw.defs),
-      cuis = cuis,
-      tuis = orEmpty(raw.tuis).sorted,
-      atts = orEmpty(raw.atts),
-      rels = orEmpty(raw.rels),
-      isRoot = raw.isRoot,
-      treeParents = orEmpty(raw.treeParents).sorted)
-  }
-}
-
-/** `UmlsClass.getPrefLabel` (`umls2rdf.py:295-332`), ported branch-for-
-  * branch. "First atom" means first in the canonical (AUI-sorted) order.
-  */
-object PrefLabel {
-
-  def select(atoms: Seq[AtomRow], rankByTty: Map[String, Int],
-      loadOnCuis: Boolean): String =
-    if (loadOnCuis) cuisCascade(atoms) else codesRank(atoms, rankByTty)
-
-  /** Codes mode: MRRANK argmax (A7); stable on canonical order for rank
-    * ties. Empty MRRANK → require exactly one atom with 'P' in TTY (A9);
-    * otherwise fail like the reference ("Unable to select pref label"). */
-  private def codesRank(atoms: Seq[AtomRow],
-      rankByTty: Map[String, Int]): String = {
-    if (rankByTty.nonEmpty) {
-      // Missing TTY in MRRANK raised KeyError in the reference; surface
-      // the same condition as an explicit error.
-      val ranked = atoms.map { a =>
-        val r = rankByTty.getOrElse(a.tty,
-          throw new IllegalStateException(s"TTY ${a.tty} not in MRRANK"))
-        (r, a)
-      }
-      ranked.maxBy(_._1)(Ordering.Int)._2.str match { case s => s }
-    } else {
-      val prefAtoms = atoms.filter(_.tty.contains("P"))
-      if (prefAtoms.size == 1) prefAtoms.head.str
-      else throw new IllegalStateException("Unable to select pref label")
-    }
-  }
-
-  /** Cuis mode cascade (A8, `umls2rdf.py:296-319`). */
-  private def cuisCascade(atoms: Seq[AtomRow]): String = {
-    if (atoms.size == 1) return atoms.head.str
-    val labels = atoms.map(_.str).distinct
-    if (labels.size == 1) return labels.head
-    val isPref = atoms.filter(_.ispref == "Y")
-    if (isPref.isEmpty) return atoms.head.str
-    if (isPref.size == 1) return isPref.head.str
-    val prefPf = isPref.filter(_.stt == "PF")
-    if (prefPf.isEmpty) return atoms.head.str
-    if (prefPf.size == 1) return prefPf.head.str
-    val ttyP = atoms.filter(a => a.tty.nonEmpty && a.tty.head == 'P')
-    if (ttyP.size == 1) ttyP.head.str
-    else atoms.head.str
   }
 }

@@ -31,7 +31,7 @@ object UmlsQueries {
     * strings — shared by the parquet-sourced (q25) and JDBC-sourced
     * (q189) entries so both verify against the SAME oracle SQL. */
   private def flatConcepts(asm: ConceptAssembler): DataFrame =
-    asm.concepts().toDF()
+    asm.conceptsColumns()
       .select(
         col("code"),
         col("prefLabel").as("pref_label"),
@@ -335,7 +335,7 @@ object UmlsQueries {
       (s, _) => {
         val asm = new ConceptAssembler(s, UmlsSource.parquet(s, FixtureDir),
           "CFX", loadOnCuis = true)
-        asm.concepts().toDF()
+        asm.conceptsColumns()
           .select(col("code"),
             col("prefLabel").as("pref_label"),
             array_join(col("altLabels"), "|").as("alt_labels"))
@@ -647,13 +647,9 @@ object UmlsQueries {
     * lineitem lines become atoms (one per (order, line); code = part),
     * consecutive lines become rels, orders become defs, parts become
     * atts, customers-of-orders become STY rows. Everything is a narrow
-    * projection — the scan cost stays parquet-side. */
-  /** Factory for profiling tools: a fresh assembler over [[scaleSource]]. */
-  private[graft] def scaleAssembler(s: SparkSession, dir: String)
-      : () => ConceptAssembler =
-    () => new ConceptAssembler(s, scaleSource(s, dir), "BIG")
-
-  /** `hotEvery > 0` collapses every partkey divisible by it into the
+    * projection — the scan cost stays parquet-side.
+    *
+    * `hotEvery > 0` collapses every partkey divisible by it into the
     * single code `X0` — a deliberately skewed SAB (hotEvery=10 → one code
     * holds ~10% of all atoms and att rows) for the q25t skew evidence.
     * `nSabs > 1` splits the same volume across `B0..B{n-1}` SABs (keyed

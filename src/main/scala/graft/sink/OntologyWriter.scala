@@ -48,9 +48,9 @@ private[sink] final case class RenderResult(
   * [[graft.assemble.ConceptAssembler.conceptsColumnsTry]] output —
   * [[graft.model.UmlsConceptRow]] fields plus the per-term finishing
   * error (`__finish_err`, NULL on success). Decoding this instead of
-  * the grouped [[graft.assemble.AssembledRaw]] keeps prefLabel
-  * selection and the distinct/sort passes inside whole-stage codegen
-  * and skips materializing ~30 atom structs per class. */
+  * the grouped [[graft.assemble.ConceptAssembler.assembled]] rows keeps
+  * prefLabel selection and the distinct/sort passes inside whole-stage
+  * codegen and skips materializing ~30 atom structs per class. */
 private[sink] final case class FinishedRow(
     code: String, prefLabel: String,
     altLabels: Seq[String], defs: Seq[String], cuis: Seq[String],
@@ -123,13 +123,13 @@ object OntologyWriter {
       styUrl = conf.baseUri + "STY/")
 
     // S6 per-term error tolerance (r20 shape): finishing failures ride
-    // the columnar plan as `__finish_err` (exactly the typed path's
-    // exception message); render stays under Try so one bad term
-    // cannot sink the file. Consuming conceptsColumnsTry instead of
-    // the grouped AssembledRaw keeps prefLabel selection and every
-    // distinct/sort inside whole-stage codegen — the typed decode
-    // (~30 atom structs per class) + Scala finish was the export's
-    // single largest per-row cost (ProfileExport, OPTIMIZATION_r20.md).
+    // the columnar plan as `__finish_err` (the failure message);
+    // render stays under Try so one bad term cannot sink the file.
+    // Consuming conceptsColumnsTry instead of the grouped assembled()
+    // rows keeps prefLabel selection and every distinct/sort inside
+    // whole-stage codegen — the typed decode (~30 atom structs per
+    // class) + Scala finish was the export's single largest per-row
+    // cost (OPTIMIZATION_r20.md).
     val renderOne: FinishedRow => RenderResult = { f =>
       if (f.__finish_err != null)
         RenderResult(f.code, null, 0, 0, 0, Nil,
@@ -153,11 +153,14 @@ object OntologyWriter {
     // re-scan flat (code, text) blocks. (The dual — sorting the
     // assembled rows and rendering above the exchange — measured
     // WORSE: the nested atom/rel struct rows cost more to shuffle,
-    // sort and re-decode than the render pass saved; ProfileExport
-    // A/B in OPTIMIZATION_r20.md.) Blocks are output-sized,
-    // MEMORY_AND_DISK, and freed by the ContextCleaner when the
-    // export returns; on elastic clusters the reliable-checkpoint
-    // knob applies (see Materialize).
+    // sort and re-decode than the render pass saved; A/B in
+    // OPTIMIZATION_r20.md.) Blocks are output-sized and MEMORY_AND_DISK.
+    // They are NOT freed when the export returns: localCheckpoint
+    // blocks go when the driver garbage-collects the checkpointed RDD
+    // (the ContextCleaner acts on GC), and reliable-checkpoint files
+    // (the elastic-cluster knob, see Materialize) stay on the
+    // checkpoint store unless
+    // `spark.cleaner.referenceTracking.cleanCheckpoints` is set.
     val rendered = Materialize.cut(
       assembler.conceptsColumnsTry(conf.strict)
         .as(Encoders.product[FinishedRow])

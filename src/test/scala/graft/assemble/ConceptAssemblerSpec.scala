@@ -1,9 +1,11 @@
 package graft.assemble
 
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
-import graft.model.RelOut
+import graft.{HostileUmls, TestSpark}
+import graft.model.{RelOut, UmlsConceptRow}
 import graft.render.{ConceptRenderer, RenderConfig}
 
 /** End-to-end assembly over an in-memory fixture source — ports of
@@ -47,49 +49,91 @@ class ConceptAssemblerSpec extends AnyFunSuite {
     new ConceptAssembler(spark, src, "TEST")
   }
 
-  // Flatten with per-array sorts: collect_list element order is
-  // execution-dependent on BOTH paths, and finish() deliberately leaves
-  // rels/atts/defs in collection order (the renderer sorts them).
-  private def flat(df: org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.functions._
-    df.select(col("code"), col("prefLabel"),
-        array_join(col("altLabels"), "|").as("alt"),
-        array_join(array_sort(col("defs")), "|").as("defs"),
-        array_join(col("cuis"), "|").as("cuis"),
-        array_join(col("tuis"), "|").as("tuis"),
-        array_join(array_sort(transform(col("atts"), a =>
-          concat_ws("~", a.getField("atn"), a.getField("atv")))), "|")
-          .as("atts"),
-        array_join(array_sort(transform(col("rels"), r =>
-          concat_ws("~", r.getField("rel"), r.getField("rela"),
-            r.getField("cui1"), r.getField("codeTarget"),
-            r.getField("codeSource")))), "|").as("rels"),
-        col("isRoot"),
-        array_join(col("treeParents"), "|").as("parents"))
-        .orderBy("code").collect().map(_.toSeq).toSeq
+  /** The production finish, decoded: one typed row per code. */
+  private def terms(asm: ConceptAssembler) =
+    asm.conceptsColumns().as(Encoders.product[UmlsConceptRow])
+
+  private def termsByCode(asm: ConceptAssembler) =
+    terms(asm).collect().map(t => t.code -> t).toMap
+
+  /** collect_list element order is execution-dependent, and neither path
+    * sorts rels/atts/defs (the renderer does), so compare them sorted. */
+  private def norm(t: UmlsConceptRow) =
+    t.copy(defs = t.defs.sorted, atts = t.atts.sortBy(_.toString),
+      rels = t.rels.sortBy(_.toString))
+
+  /** Per-code outcome of the columnar finish: the finished row, or the
+    * `__finish_err` message of a class that fails. */
+  private def columnarOutcomes(asm: ConceptAssembler)
+      : Map[String, Either[String, UmlsConceptRow]] = {
+    val df = asm.conceptsColumnsTry()
+    val failed = df.filter(col("__finish_err").isNotNull)
+      .select("code", "__finish_err").collect()
+      .map(r => r.getString(0) -> Left(r.getString(1)))
+    val finished = df.filter(col("__finish_err").isNull)
+      .as(Encoders.product[UmlsConceptRow]).collect()
+      .map(t => t.code -> Right(norm(t)))
+    (failed ++ finished).toMap
   }
+
+  /** The typed oracle's per-code outcomes, normalised the same way. */
+  private def typedOutcomes(asm: ConceptAssembler,
+      loadOnCuis: Boolean = false)
+      : Map[String, Either[String, UmlsConceptRow]] =
+    TypedFinishOracle.outcomes(asm, loadOnCuis)
+      .map { case (c, o) => c -> o.map(norm) }
 
   test("columnar finishing equals the typed path in every fixture mode") {
     import graft.sources.UmlsSource
     val fixtureDir = "/root/repo/fixtures/umls"
-    val modes = Seq(
-      // codes mode with MRRANK (A7 argmax + tie-break)
-      new ConceptAssembler(spark, UmlsSource.parquet(spark, fixtureDir), "FIX"),
-      // cuis mode (A8 cascade, one fixture CUI per branch)
-      new ConceptAssembler(spark, UmlsSource.parquet(spark, fixtureDir),
-        "CFX", loadOnCuis = true),
-      // MeSH (tree parents populated)
-      new ConceptAssembler(spark, UmlsSource.parquet(spark, fixtureDir), "MSH"),
-      // empty-MRRANK A9 branch (in-memory fixture has no MRRANK rows)
-      assembler())
-    modes.foreach { asm =>
-      assert(flat(asm.concepts().toDF()) === flat(asm.conceptsColumns()),
-        asm.toString)
+    def fuzz(label: String, fixture: Map[String, DataFrame]) =
+      (label, new ConceptAssembler(spark, TestSpark.fixedSource(fixture),
+        "RND"), false)
+    // MRRANK without two of the TTYs the atoms carry: A7's "TTY ... not
+    // in MRRANK", named for the FIRST missing atom in canonical order
+    def rankGaps(seed: Int) = {
+      val f = HostileUmls.structureFixture(seed)
+      f.updated("MRRANK", f("MRRANK").filter(!col("TTY").isin("ET", "AB")))
     }
+    val inputs = Seq(
+      // codes mode with MRRANK (A7 argmax + tie-break)
+      ("FIX", new ConceptAssembler(spark,
+        UmlsSource.parquet(spark, fixtureDir), "FIX"), false),
+      // cuis mode (A8 cascade, one fixture CUI per branch)
+      ("CFX", new ConceptAssembler(spark,
+        UmlsSource.parquet(spark, fixtureDir), "CFX", loadOnCuis = true),
+        true),
+      // MeSH (tree parents populated)
+      ("MSH", new ConceptAssembler(spark,
+        UmlsSource.parquet(spark, fixtureDir), "MSH"), false),
+      // empty-MRRANK A9 branch (in-memory fixture has no MRRANK rows)
+      ("TEST", assembler(), false)) ++
+      (1 to 8).map(s => fuzz(s"structure-seed$s",
+        HostileUmls.structureFixture(s))) ++
+      (1 to 5).map(s => fuzz(s"hostile-seed$s",
+        HostileUmls.randomFixture(s))) ++
+      Seq(2, 4, 6).map(s => fuzz(s"rank-gap-seed$s", rankGaps(s)))
+    val errors = inputs.flatMap { case (label, asm, onCuis) =>
+      val oracle = typedOutcomes(asm, onCuis)
+      val columnar = columnarOutcomes(asm)
+      assert(columnar === oracle, label)
+      val errs = oracle.values.collect { case Left(e) => e }.toSet
+      // the raising variant fails with one of those messages
+      if (errs.nonEmpty) {
+        val ex = intercept[Exception](asm.conceptsColumns().collect())
+        assert(errs.exists(e => ex.getMessage.contains(e)), label)
+      }
+      asm.unpersistShared()
+      errs
+    }.toSet
+    // both failure branches were exercised, not just the successes
+    assert(errors.exists(e => e.startsWith("TTY ") &&
+      e.endsWith(" not in MRRANK")), errors)
+    assert(errors.contains("Unable to select pref label"), errors)
   }
 
   test("terms rewrite code-mode relations and filter self-maps") {
-    val terms = assembler().concepts().collect().map(t => t.code -> t).toMap
+    val terms = termsByCode(assembler())
     assert(terms.keySet == Set("CODE1", "CODE2"))
     assert(terms("CODE1").rels ==
       Seq(RelOut("RO", "mappedTo", "CUI_TARGET", "CODE2", "CODE1")))
@@ -102,9 +146,9 @@ class ConceptAssemblerSpec extends AnyFunSuite {
   }
 
   test("identical concepts and rendered bytes under permuted, repartitioned input") {
-    val a = assembler().concepts().collect().sortBy(_.code)
+    val a = terms(assembler()).collect().sortBy(_.code)
     val permuted = assembler(atomRows = atoms.reverse, relRows = rels.reverse)
-    val b = permuted.concepts().repartition(5).collect().sortBy(_.code)
+    val b = terms(permuted).repartition(5).collect().sortBy(_.code)
     assert(a.toSeq == b.toSeq)
     val cfg = RenderConfig("http://example.org/test")
     val ttlA = a.map(ConceptRenderer.render(_, cfg).text).mkString
@@ -115,16 +159,18 @@ class ConceptAssemblerSpec extends AnyFunSuite {
   test("empty-CODE atoms are dropped by default and fail strict mode") {
     val withBad = atoms :+ conso("CUI_BAD", "AUI_BAD", "", "No code", "PT")
     val asm = assembler(atomRows = withBad)
-    val codes = asm.concepts().collect().map(_.code).toSet
+    val codes = terms(asm).collect().map(_.code).toSet
     assert(codes == Set("CODE1", "CODE2")) // no phantom NULL-code concept
-    val ex = intercept[IllegalStateException](asm.concepts(strict = true))
+    val ex = intercept[IllegalStateException](
+      asm.conceptsColumns(strict = true))
     assert(ex.getMessage.contains("empty CODE"))
   }
 
   test("strict mode flags an AUI resolving to two codes") {
     val withDup = atoms :+ conso("CUI_X", "AUI_SOURCE", "CODE9", "Dup aui", "PT")
     val asm = assembler(atomRows = withDup)
-    val ex = intercept[IllegalStateException](asm.concepts(strict = true))
+    val ex = intercept[IllegalStateException](
+      asm.conceptsColumns(strict = true))
     assert(ex.getMessage.contains("more than one code"))
   }
 
@@ -135,7 +181,7 @@ class ConceptAssemblerSpec extends AnyFunSuite {
     // (umls2rdf.py:717) but still drives is_root (computed pre-resolution).
     val rootRel = mrrel("CROOT", "AUI_NOWHERE", "CUI_SOURCE", "AUI_SOURCE", "CHD")
     val asm = assembler(atomRows = withRoot, relRows = rels :+ rootRel)
-    val terms = asm.concepts().collect().map(t => t.code -> t).toMap
+    val terms = termsByCode(asm)
     assert(terms("CODE1").isRoot)
     assert(!terms("CODE2").isRoot)
     assert(terms("CODE1").rels ==
@@ -168,8 +214,8 @@ class ConceptAssemblerSpec extends AnyFunSuite {
     val src = TestSpark.fixedSource(Map(
       "MRCONSO" -> TestSpark.mkTable("MRCONSO", icdAtoms),
       "MRREL" -> TestSpark.mkTable("MRREL", Seq(rel))))
-    val terms = new ConceptAssembler(spark, src, "ICD10CM").concepts()
-      .collect().map(t => t.code -> t.isRoot).toMap
+    val terms = termsByCode(new ConceptAssembler(spark, src, "ICD10CM"))
+      .map { case (c, t) => c -> t.isRoot }
     assert(terms("A00") === true) // patched root
     assert(terms("ICD") === false)
   }
@@ -182,8 +228,8 @@ class ConceptAssemblerSpec extends AnyFunSuite {
       UmlsSource.parquet(spark, fixtureDir), "FIX")
     val salted = new ConceptAssembler(spark,
       UmlsSource.parquet(spark, fixtureDir), "FIX", saltBuckets = 4)
-    assert(flat(salted.conceptsColumns()) === flat(plain.conceptsColumns()))
-    assert(flat(salted.concepts().toDF()) === flat(plain.concepts().toDF()))
+    assert(columnarOutcomes(salted) === columnarOutcomes(plain))
+    assert(typedOutcomes(salted) === typedOutcomes(plain))
     // The skew mitigation is real in the physical plan: stage one groups
     // by (code, __graft_salt), stage two concatenates partial arrays.
     val saltedPlan = salted.conceptsColumns()

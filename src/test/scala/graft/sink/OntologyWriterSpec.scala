@@ -233,7 +233,7 @@ class OntologyWriterSpec extends AnyFunSuite {
     // ONE materialization of the rendered terms (Materialize.cut —
     // before r20 the write's range-sort sampled its LIVE child, so the
     // assemble+finish+render subtree executed TWICE inside the write
-    // execution; ProfileExport counted 40k render calls for 20k terms),
+    // execution; 40k render calls for 20k terms, OPTIMIZATION_r20.md),
     // and the write action over the checkpointed flat rows (AQE may
     // split an execution into several jobs; they share an execution
     // id). A regression that re-renders per action would count 6+.

@@ -259,6 +259,21 @@ class DiffHistorySpec extends AnyFunSuite {
     assert(rcOld === 0, outOld)
   }
 
+  test("cpus_requested compares as an integer core count, and a value " +
+      "on one side only prints a note instead of passing silently") {
+    for (spelling <- Seq("32.0", " 32")) {
+      val (rc, out) = run(Seq(
+        entry(quiet, 1.0, cpusRequested = "32"),
+        entry(quiet, 1.0, cpusRequested = spelling)))
+      assert(!out.contains("CONFIG") && rc === 0, s"'$spelling': $out")
+    }
+    val (rcOne, outOne) = run(Seq(entry(quiet, 1.0),
+      entry(quiet, 1.0, cpusRequested = "32")))
+    assert(outOne.contains("cpus_requested recorded on B only (32)"),
+      outOne)
+    assert(rcOne === 0, outOne)
+  }
+
   test("explicit in-range indices work; out-of-range and a lone index " +
       "exit with a usage message instead of a stack trace") {
     val lines = Seq(entry(quiet, 1.0), entry(quiet, 1.0),

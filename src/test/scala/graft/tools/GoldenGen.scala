@@ -1,19 +1,22 @@
 package graft.tools
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.TestSpark
 import graft.model.OntologyJob
 import graft.pipeline.{PipelineConfig, UmlsPipeline}
+import graft.render.EngineGoldens
 import graft.sink.UmlsExportConfig
 import graft.sources.UmlsSource
 
 /** Regenerates the committed Turtle goldens from the production pipeline
   * over the committed parquet fixtures — the same invocation
   * `RrfSourceSpec."parquet export matches the committed golden files"`
-  * replays. Run after any intentional renderer/writer behavior change
-  * that `ReferenceDifferentialSpec` has first proven byte-equal to the
-  * reference implementation:
+  * replays — plus the engine whole-file goldens `EngineGoldenSpec`
+  * replays (`golden/engine/`). Run after any intentional renderer/writer
+  * behavior change that `ReferenceDifferentialSpec` has first proven
+  * byte-equal to the reference implementation:
   *
   *   sbt 'Test/runMain graft.tools.GoldenGen'
   */
@@ -36,6 +39,12 @@ object GoldenGen {
           StandardCopyOption.REPLACE_EXISTING)
         println(s"[golden] rewrote $dst/$f")
       }
+    EngineGoldens.cases.foreach { case (name, fixture) =>
+      val ttl = EngineGoldens.export(spark, fixture())
+      Files.write(Paths.get(s"$dst/engine/$name"),
+        ttl.getBytes(StandardCharsets.UTF_8))
+      println(s"[golden] rewrote $dst/engine/$name")
+    }
     spark.stop()
   }
 }

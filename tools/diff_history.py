@@ -84,6 +84,15 @@ def is_int(s):
         return False
 
 
+def cpus(v):
+    """A recorded core count as an int, so 32, "32", " 32" and "32.0"
+    are one config; an unparseable value compares as its stripped text."""
+    try:
+        return int(float(str(v).strip()))
+    except ValueError:
+        return str(v).strip()
+
+
 def parse_args(argv):
     rest = argv[1:]
     profile = None
@@ -261,7 +270,11 @@ def main(argv):
     # partitions differ), so the comparison flags instead of passing.
     cra = a.get("cpus_requested")
     crb = b.get("cpus_requested")
-    if cra is not None and crb is not None and str(cra) != str(crb):
+    if (cra is None) != (crb is None):
+        side, val = ("A", cra) if cra is not None else ("B", crb)
+        print(f"note   cpus_requested recorded on {side} only ({val}) -- "
+              "core-count comparability unchecked")
+    elif cra is not None and cpus(cra) != cpus(crb):
         print(f"CONFIG cpus_requested differs (A={cra}, B={crb}) -- "
               "different physical plans; walls are not comparable")
         return 1
